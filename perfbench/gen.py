@@ -6,20 +6,29 @@ outcome of every item next to the item itself; the checks in `checks.py`
 compare the program's outputs against those labels.
 
 Fixed input properties (the same on every seed; only the specific rows,
-constants and texts vary):
+constants and texts vary), and where each figure comes from:
 
-- nl2sql questions: LARGE_SHARE of the set returns thousands of rows,
-  BROKEN_SHARE is non-executable and goes through repair (half repaired
-  to an equivalent query, a quarter to a wrong one, a quarter stays
-  broken), WRONG_SHARE returns wrong values, the rest are equivalent
-  rewrites of the gold query.
-- serve load: each pass sends two rollout groups to /api/run (every
-  worker asks for the same record) and one /api/run_batch of BATCH_ITEMS
-  records with BATCH_UNIQUE distinct signatures; the server-held set has
-  no large-result items.
+- nl2sql questions: LARGE_SHARE of the set returns thousands of rows
+  (the specification's "about 10%"). BROKEN_SHARE is non-executable and goes
+  through repair (half repaired to an equivalent query, a quarter to a
+  wrong one, a quarter stays broken), WRONG_SHARE returns wrong values,
+  the rest are equivalent rewrites of the gold query. These three
+  figures are chosen, not measured: no public source fixes them for
+  this mock-LLM setup. They make every outcome category non-empty at the
+  smallest size (16 questions), send a fifth of the items through the
+  repair turns so that the optimize actor and its extra LLM calls show
+  without dominating a pass, and give an overall EX of 0.6.
+- serve load: each pass sends two rollout steps to /api/run, every one
+  of the nproc workers asking for the same record (the group size is the
+  client count the specification allows: nproc), each step followed by one
+  /api/run_batch of BATCH_ITEMS records with BATCH_UNIQUE distinct
+  signatures (the specification's 8 records, about half repeated). The
+  server-held set has no large-result items. The two-steps-per-pass
+  rhythm is chosen.
 - corpora: NEAR_DUP_SHARE of the documents copy an earlier document and
-  append one word (the sf0.1 documents' duplicate pattern), EXACT_DUP_SHARE
-  are verbatim copies.
+  append one word (4.9% of the sf0.1 `documents` rows have that shape).
+  EXACT_DUP_SHARE are verbatim copies; that figure is chosen (sf0.1 has
+  0.2%) so that every 150-document delta holds at least one.
 """
 import datetime
 import os
@@ -279,22 +288,24 @@ def questions(rng, facts, n, large=True):
 
 
 def serve_schedule(rng, records):
-    """One pass of the reward-server load: two rollout groups, each every
-    worker asking for the reward of the same record (an equivalent one,
-    then a repaired one, each of a fixed template), and one /api/run_batch of BATCH_ITEMS inline
-    records over BATCH_UNIQUE distinct signatures (equivalent, wrong,
-    repaired, still broken), each repeated."""
+    """One pass of the reward-server load: two rollout steps, each every
+    worker asking /api/run for the reward of the same record (an
+    equivalent one, then a repaired one, each of a fixed template), each
+    followed by one /api/run_batch of BATCH_ITEMS inline records over
+    BATCH_UNIQUE distinct signatures (equivalent, wrong, repaired, still
+    broken), each repeated, in a seeded order."""
     def one(*cats):
         # the lowest template of the category, so every seed sends
         # requests of the same shape
         return min((r for r in records if r["category"] in cats),
                    key=lambda r: (str(r["template"]), r["instance_id"]))
-    reqs = [{"kind": "run", "id": one("eq")["instance_id"]},
-            {"kind": "run", "id": one("fix_eq")["instance_id"]}]
     pick = [one("eq"), one("wrong"), one("fix_eq", "fix_wrong"), one("stuck")]
-    items = [r["instance_id"] for r in pick] * (BATCH_ITEMS // BATCH_UNIQUE)
-    rng.shuffle(items)
-    reqs.append({"kind": "batch", "id": "B0000", "items": items})
+    reqs = []
+    for k, run in enumerate((one("eq"), one("fix_eq"))):
+        items = [r["instance_id"] for r in pick] * (BATCH_ITEMS // BATCH_UNIQUE)
+        rng.shuffle(items)
+        reqs += [{"kind": "run", "id": run["instance_id"]},
+                 {"kind": "batch", "id": f"B{k:04d}", "items": items}]
     return reqs
 
 

@@ -16,7 +16,6 @@ the run or a correctness check fails. See perfbench/README.md.
 """
 import argparse
 import json
-import math
 import os
 import shutil
 import statistics
@@ -45,7 +44,13 @@ SIZES = {
                               "compact_every": 2}},
 }
 BASE_DOCS = 400  # q_corpus_delta's oracle treats doc_id < 400 as the old corpus
-JVM_HEAP = "2g"
+# a fixed heap limit, no pre-touch: peak_rss_mb counts the heap pages the
+# program really used. A fixed young generation and marking threshold,
+# and no heap growth for GC-time reasons (GCTimeRatio=1), take away the
+# sizing decisions G1 would otherwise make from the run's pause times;
+# the heap grows past its 1 GB start only when live data needs it.
+JVM_MEMORY = ["-Xms1g", "-Xmx2g", "-Xmn384m", "-XX:-G1UseAdaptiveIHOP",
+              "-XX:GCTimeRatio=1"]
 SETUP_REPEATS = 3
 
 END_TO_END = {
@@ -96,29 +101,14 @@ def applies(workload, metric):
     return metric.startswith(_EVERYWHERE + APPLIES[workload])
 
 
-def quantile(xs, q, steps=4000):
-    """Harrell-Davis estimate of the q-quantile: a Beta-weighted mean of
-    all order statistics, steadier than one order statistic on the small
-    samples a 15 s run gives (the weights integrate the Beta pdf
-    numerically)."""
-    s = sorted(xs)
-    n = len(s)
-    if n == 1:
-        return s[0]
-    a, b = q * (n + 1), (1 - q) * (n + 1)
-    lb = math.lgamma(a) + math.lgamma(b) - math.lgamma(a + b)
-
-    def pdf(x):
-        return math.exp((a - 1) * math.log(x) + (b - 1) * math.log1p(-x) - lb)
-
-    cdf = [0.0]
-    for i in range(1, steps):
-        cdf.append(cdf[-1] + pdf(i / steps) / steps)
-    cdf.append(cdf[-1])
-    total = cdf[-1]
-    w = [(cdf[(i + 1) * steps // n] - cdf[i * steps // n]) / total
-         for i in range(n)]
-    return sum(wi * x for wi, x in zip(w, s))
+def quantile(xs, q):
+    """Sample q-quantile, interpolated linearly between order statistics
+    (`statistics.quantiles`, inclusive method; q = 0.5 is the median).
+    Every quantile the benchmark reports is taken here, from raw
+    samples."""
+    if len(xs) == 1:
+        return xs[0]
+    return statistics.quantiles(xs, n=100, method="inclusive")[round(q * 100) - 1]
 
 
 def generate(workload, size, seed, work):
@@ -182,7 +172,8 @@ def corrupt(workload, res):
 
 def check(workload, res, manifest):
     if workload == "nl2sql_batch":
-        return checks.nl2sql(res["outcomes"], manifest["questions"])
+        return (checks.nl2sql(res["outcomes"], manifest["questions"]) +
+                res["evaluator_mismatches"])
     if workload == "serve_reward":
         return checks.serve(res["runs"], res["batches"], manifest["questions"])
     if workload == "corpus_curate":
@@ -210,11 +201,13 @@ def end_to_end(workload, res, gen_s):
 
 def per_layer(workload, res):
     got = dict(res["layers"])
+    for m, xs in res.get("layer_samples", {}).items():
+        got[m] = quantile(xs, 0.9 if m.endswith("_p90_s") else 0.5) if xs else 0.0
     got["core.session_build_s"] = res["session_build_s"]
     got["jvm.gc_s"] = res["jvm_gc_s"]
     got["jvm.heap_after_gc_mb"] = res["jvm_heap_after_gc_mb"]
-    got["trace.overhead_s"] = (statistics.median(res["traced_pass_s"]) -
-                               statistics.median(res["pass_s"]))
+    got["trace.overhead_s"] = (quantile(res["traced_pass_s"], 0.5) -
+                               quantile(res["pass_s"], 0.5))
     missing = [m for m in PER_LAYER if applies(workload, m) and m not in got]
     if missing:
         raise SystemExit(f"traced run did not report {missing}")
@@ -247,9 +240,7 @@ def run_jvm(root, cp, work, manifest, deadline):
              "java.base/java.util.concurrent.atomic", "java.base/sun.nio.ch",
              "java.base/sun.nio.cs", "java.base/sun.security.action",
              "java.base/sun.util.calendar"]
-    # a fixed, pre-touched heap: peak RSS then moves with off-heap and
-    # native growth instead of with G1's heap-sizing decisions
-    cmd = ["java", f"-Xms{JVM_HEAP}", f"-Xmx{JVM_HEAP}", "-XX:+AlwaysPreTouch",
+    cmd = ["java"] + JVM_MEMORY + [
            f"-Djava.io.tmpdir={tmp}", f"-Dspark.local.dir={local}",
            f"-Dspark.sql.warehouse.dir={os.path.join(work, 'warehouse')}",
            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"]
@@ -315,7 +306,7 @@ def main():
         "jvm_flags": res["jvm_flags"], "machine_start": res["machine_start"],
         "machine_end": res["machine_end"], "warmup_done": res["warmup_done"],
         "setup_parts_s": dict(res["setup_parts_s"],
-                              generate=statistics.median(gen_times),
+                              generate=quantile(gen_times, 0.5),
                               session_build=res["session_build_s"]),
         "passes": res["passes"], "timed_s": res["timed_s"],
         "spans_file": "spans.json" if a.trace else None,
@@ -328,7 +319,7 @@ def main():
         metrics = per_layer(a.workload, res)
         units = PER_LAYER
     else:
-        metrics = end_to_end(a.workload, res, statistics.median(gen_times))
+        metrics = end_to_end(a.workload, res, quantile(gen_times, 0.5))
         units = END_TO_END
     record["metrics"] = metrics
     with open(os.path.join(work, "record.json"), "w") as fh:

@@ -142,4 +142,6 @@ final case class Ctx(spark: SparkSession, manifest: JsonNode, tracer: Tracer,
     ledger: Ledger, cores: Int) {
   def str(k: String): String = manifest.get(k).asText()
   def int(k: String): Int = manifest.get(k).asInt()
+  /** Whether this run is traced (some of its passes record spans). */
+  val tracing: Boolean = manifest.get("trace").asInt() == 1
 }

@@ -11,6 +11,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
 
 import graft.actors.PipelineActor
@@ -23,11 +24,6 @@ import graft.operators.{CorpusPipeline, LineIndex, TextDedup}
 import graft.serve.ServingServer
 
 object Stats {
-  def median(xs: Seq[Double]): Double =
-    if (xs.isEmpty) 0.0 else {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
   def time[A](body: => A): (A, Double) = {
     val t0 = System.nanoTime()
     val a = body
@@ -99,19 +95,21 @@ final class Nl2SqlBatch(ctx: Ctx) extends Workload {
   private val drainS = ArrayBuffer[Double]()
   private val tracedS = ArrayBuffer[Double]()
   private val outcomes = ArrayBuffer[Map[String, Any]]()
+  private val mismatches = ArrayBuffer[String]()
   private var warmupS = 0.0
   private var tablesS = 0.0
   private var done = 0L
-  // traced-pass evaluation counters
-  private val compared = new java.util.concurrent.atomic.AtomicLong()
-  private val rejected = new java.util.concurrent.atomic.AtomicLong()
+  // traced-pass evaluation counters; result pairs are kept during the
+  // pass and tallied after its timer stops
+  private val pairs = new ConcurrentLinkedQueue[(Seq[Row], Seq[Row])]()
+  private var compared = 0L
+  private var rejected = 0L
   private val execFailed = new java.util.concurrent.atomic.AtomicLong()
   private lazy val backend = new SqlBackend(ctx.spark, t2s.cfg.evalTimeoutSec)
 
   def setup(): Unit = {
     tablesS = Stats.time(t2s.engine.schemaDf.count())._2
-    // two warm-up passes: the JIT is still speeding the second one up
-    warmupS = Stats.time { runPlain(); runPlain() }._2
+    warmupS = Stats.time(if (ctx.tracing) runDriven() else runPlain())._2
     outcomes.clear()
     evalS.clear()
     CacheBin.drain()
@@ -129,33 +127,60 @@ final class Nl2SqlBatch(ctx: Ctx) extends Workload {
     record(outs.map(o => (o.instanceId, o.score, o.predError.isDefined)))
   }
 
+  /** Untraced runs time the program's own `execute` + `evaluate`. A
+    * traced run drives the evaluation itself on every pass, with the
+    * tracer on in the traced passes only, so traced − untraced pass
+    * wall is the cost of tracing alone; after each driven pass (outside
+    * its timer) the program's `Engine.evaluate` scores the same items,
+    * and any difference fails the run.
+    */
   def pass(traced: Boolean): Unit = {
-    val (_, s) = Stats.time(if (traced) runTraced() else runPlain())
+    val (scored, s) = Stats.time(if (ctx.tracing) Some(runDriven()) else { runPlain(); None })
     (if (traced) tracedS else passS) += s
     if (!traced) done += t2s.questions.size
+    scored.foreach(crossCheck)
+    pairs.asScala.foreach { case (p, g) =>
+      compared += p.size + g.size
+      if (ResultComparator.quickReject(p.map(_.toSeq), g.map(_.toSeq), ignoreOrder = false))
+        rejected += 1
+    }
+    pairs.clear()
     drainS += Stats.time(ctx.tracer("core", "drain")(CacheBin.drain()))._2
   }
 
   /** The same work as `runPlain`, driven through the layers' public
-    * functions so each call is a span: every actor's `act`, then
-    * `Engine.evaluate`'s per-item steps (`Transpiler.forDialect`,
-    * `SqlBackend.runCollectRows`, `ResultComparator.equivalentRows`) on
-    * a pool of the same size.
+    * functions so each call is a span when the tracer is on: every
+    * actor's `act`, then `Engine.evaluate`'s per-item steps
+    * (`Transpiler.forDialect`, `SqlBackend.runCollectRows`,
+    * `ResultComparator.equivalentRows`) on a pool of the same size.
     */
-  private def runTraced(): Unit = {
-    t2s.llm.counting = true
+  private def runDriven(): (Array[Row], Seq[(String, Option[Int], Boolean)]) = {
+    t2s.llm.counting = ctx.tracer.enabled
     val tr = ctx.tracer
     val answered = t2s.engine.execute(qdf, t2s.tracedActors)
     val items = tr("actors", "collect")(
       answered.select("instance_id", "gold_sql", "pred_sql").collect())
     val pool = Executors.newFixedThreadPool(ctx.cores)
-    try {
-      val futures = items.toSeq.map { r =>
+    val scores = try {
+      items.toSeq.map { r =>
         pool.submit(() => evalOne(r.getString(0), r.getString(1), r.getString(2)))
-      }
-      record(futures.map(_.get()))
+      }.map(_.get())
     } finally pool.shutdown()
+    record(scores)
     t2s.llm.counting = false
+    (items, scores)
+  }
+
+  private def crossCheck(driven: (Array[Row], Seq[(String, Option[Int], Boolean)])): Unit = {
+    val (items, scores) = driven
+    val df = items.toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      .toDF("instance_id", "gold_sql", "pred_sql")
+    val want = t2s.engine.evaluate(df)._1
+      .map(o => o.instanceId -> (o.score, o.predError.isDefined)).toMap
+    scores.foreach { case (iid, s, e) =>
+      if (!want.get(iid).contains((s, e)))
+        mismatches += s"$iid: driven evaluation ($s, pred_error=$e) != Engine.evaluate ${want.get(iid)}"
+    }
   }
 
   private def run(sql: String) = {
@@ -163,7 +188,7 @@ final class Nl2SqlBatch(ctx: Ctx) extends Workload {
     val t = tr("dialect", "forDialect")(Transpiler.forDialect(t2s.engine.dialect)(sql))
     val out = tr("exec", "runCollectRows")(
       backend.runCollectRows(() => ctx.spark.sql(t), sql, t2s.cfg.evalTimeoutSec))
-    if (out.isLeft) execFailed.incrementAndGet()
+    if (out.isLeft && tr.enabled) execFailed.incrementAndGet()
     out
   }
 
@@ -176,9 +201,7 @@ final class Nl2SqlBatch(ctx: Ctx) extends Workload {
           case Some(Right(p)) =>
             val s = ctx.tracer("evalx", "equivalentRows")(ResultComparator
               .equivalentRows(p.rows, g.rows, p.columns.size, g.columns.size))
-            compared.addAndGet(p.rows.size + g.rows.size)
-            if (ResultComparator.quickReject(p.rows.map(_.toSeq), g.rows.map(_.toSeq),
-                ignoreOrder = false)) rejected.incrementAndGet()
+            if (ctx.tracer.enabled) pairs.add((p.rows, g.rows))
             (iid, Some(s), false)
         }
     }
@@ -190,7 +213,8 @@ final class Nl2SqlBatch(ctx: Ctx) extends Workload {
       "setup_parts_s" -> Map("tables" -> tablesS, "warmup" -> warmupS),
       "pass_s" -> passS.toSeq, "batch_s" -> evalS.toSeq,
       "attempted" -> (outcomes.size * t2s.questions.size),
-      "failed" -> 0, "outcomes" -> outcomes.toSeq)
+      "failed" -> 0, "outcomes" -> outcomes.toSeq,
+      "evaluator_mismatches" -> mismatches.toSeq)
     if (!traced) base
     else {
       val per = math.max(tracedS.size, 1).toDouble
@@ -198,8 +222,9 @@ final class Nl2SqlBatch(ctx: Ctx) extends Workload {
       val exec = r.spansOf("exec")
       val execJobs = r.jobsIn(exec)
       val ev = r.spansOf("evalx")
-      base ++ Map("traced_pass_s" -> tracedS.toSeq, "layers" -> (Map(
-        "core.drain_s" -> Stats.median(drainS.toSeq),
+      base ++ Map("traced_pass_s" -> tracedS.toSeq,
+        "layer_samples" -> Map("core.drain_s" -> drainS.toSeq),
+        "layers" -> (Map(
         "exec.calls" -> exec.size / per,
         "exec.busy_s" -> exec.map(_.seconds).sum / per,
         "exec.jobs" -> execJobs.size / per,
@@ -211,8 +236,8 @@ final class Nl2SqlBatch(ctx: Ctx) extends Workload {
         "dialect.busy_s" -> r.spansOf("dialect").map(_.seconds).sum / per,
         "evalx.calls" -> ev.size / per,
         "evalx.busy_s" -> ev.map(_.seconds).sum / per,
-        "evalx.rows_compared" -> compared.get / per,
-        "evalx.quick_reject_share" -> rejected.get.toDouble / math.max(ev.size, 1))
+        "evalx.rows_compared" -> compared / per,
+        "evalx.quick_reject_share" -> rejected.toDouble / math.max(ev.size, 1))
         ++ t2s.actorMetrics(r, per)
         ++ t2s.llmMetrics(per * t2s.questions.size, per)))
     }
@@ -221,23 +246,23 @@ final class Nl2SqlBatch(ctx: Ctx) extends Workload {
 
 /** `serve_reward`: an in-process `ServingServer` on loopback under a
   * closed loop of `cores` clients. One pass sends the generated request
-  * schedule; each client sends its next request when the last returns.
+  * schedule (see `runSchedule`).
   */
 final class ServeReward(ctx: Ctx) extends Workload {
   private val t2s = new TextToSql(ctx)
   private val dataset = t2s.questions.map(q => q.iid -> (q.text, Option(q.gold))).toMap
   private val byId = t2s.questions.map(q => q.iid -> q).toMap
   private val schedule = ctx.manifest.get("requests").asScala.toSeq
-  private def server(pipeline: graft.actors.Actor) =
-    new ServingServer(ctx.spark, pipeline, port = 0, sqlTimeoutSec = 120,
-      dataset = dataset, dialect = t2s.engine.dialect)
-  private lazy val plain = server(t2s.engine.pipeline())
-  private lazy val traced = server(PipelineActor(t2s.tracedActors))
+  // a traced run serves every pass through the wrapped actors, with the
+  // tracer on in the traced passes only, so traced − untraced pass wall
+  // is the cost of tracing alone
+  private val server = new ServingServer(ctx.spark,
+    if (ctx.tracing) PipelineActor(t2s.tracedActors) else t2s.engine.pipeline(),
+    port = 0, sqlTimeoutSec = 120, dataset = dataset, dialect = t2s.engine.dialect)
   private val client = HttpClient.newBuilder()
     .version(HttpClient.Version.HTTP_1_1).connectTimeout(Duration.ofSeconds(10)).build()
   private val pool = Executors.newFixedThreadPool(ctx.cores)
-  private var plainPort = 0
-  private var tracedPort = 0
+  private var port = 0
 
   final case class Sample(kind: String, id: String, latencyS: Double,
       status: Int, body: Option[JsonNode], traced: Boolean)
@@ -250,10 +275,9 @@ final class ServeReward(ctx: Ctx) extends Workload {
 
   def setup(): Unit = {
     t2s.engine.schemaDf.count()
-    plainPort = plain.start()
-    tracedPort = if (ctx.manifest.get("trace").asInt() == 1) traced.start() else 0
-    // warm-up: two passes, then drop their samples
-    warmupS = Stats.time((0 until 2).foreach(_ => runSchedule(plainPort, schedule, false)))._2
+    port = server.start()
+    // warm-up: one pass, then drop its samples
+    warmupS = Stats.time(runSchedule(schedule, false))._2
     samples.clear()
     CacheBin.drain()
   }
@@ -269,7 +293,7 @@ final class ServeReward(ctx: Ctx) extends Workload {
       })))
   }
 
-  private def send(port: Int, req: JsonNode, tracedPass: Boolean): Unit = {
+  private def send(req: JsonNode, tracedPass: Boolean): Unit = {
     val kind = req.get("kind").asText()
     val path = if (kind == "run") "/api/run" else "/api/run_batch"
     val http = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
@@ -293,31 +317,30 @@ final class ServeReward(ctx: Ctx) extends Workload {
     * ask for the reward of that record and the next step starts when
     * every one has its answer; a batch entry is one request on its own.
     */
-  private def runSchedule(port: Int, reqs: Seq[JsonNode], tracedPass: Boolean): Unit =
+  private def runSchedule(reqs: Seq[JsonNode], tracedPass: Boolean): Unit =
     reqs.foreach { r =>
       val n = if (r.get("kind").asText() == "run") ctx.cores else 1
-      Seq.fill(n)(pool.submit[Unit](() => send(port, r, tracedPass))).foreach(_.get())
+      Seq.fill(n)(pool.submit[Unit](() => send(r, tracedPass))).foreach(_.get())
     }
 
   def pass(tracedPass: Boolean): Unit =
-    if (!tracedPass) passS += Stats.time(runSchedule(plainPort, schedule, false))._2
+    if (!tracedPass) passS += Stats.time(runSchedule(schedule, false))._2
     else {
       (0 until 5).foreach { _ =>
-        val req = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$tracedPort/healthz"))
+        val req = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/healthz"))
           .GET().build()
         floorS += Stats.time(client.send(req, HttpResponse.BodyHandlers.ofString()))._2
       }
       t2s.llm.counting = true
       val t0 = System.currentTimeMillis()
-      tracedPassS += Stats.time(runSchedule(tracedPort, schedule, true))._2
+      tracedPassS += Stats.time(runSchedule(schedule, true))._2
       tracedWindows += ((t0, System.currentTimeMillis()))
       t2s.llm.counting = false
     }
 
   override def close(): Unit = {
     pool.shutdownNow()
-    plain.stop()
-    if (tracedPort != 0) traced.stop()
+    server.stop()
   }
 
   private def plainSamples = samples.asScala.toSeq.filterNot(_.traced)
@@ -326,6 +349,7 @@ final class ServeReward(ctx: Ctx) extends Workload {
   private val batchSize = schedule.filter(_.get("kind").asText() == "batch")
     .map(r => r.get("id").asText() -> r.get("items").size()).toMap
   private def byIdCount(id: String): Long = batchSize.getOrElse(id, 0).toLong
+  private def duration(s: Sample) = s.body.get.get("duration_seconds").asDouble()
 
   def result(tracedRun: Boolean): Map[String, Any] = {
     val all = samples.asScala.toSeq
@@ -336,7 +360,7 @@ final class ServeReward(ctx: Ctx) extends Workload {
       "setup_parts_s" -> Map("warmup" -> warmupS),
       "pass_s" -> passS.toSeq,
       "request_s" -> runs.map(_.latencyS),
-      "handle_s" -> runs.filter(ok).map(_.body.get.get("duration_seconds").asDouble()),
+      "handle_s" -> runs.filter(ok).map(duration),
       "batch_s" -> plainS.filter(_.kind == "batch").map(_.latencyS),
       "attempted" -> all.size,
       "failed" -> all.count(s => !ok(s)),
@@ -364,35 +388,25 @@ final class ServeReward(ctx: Ctx) extends Workload {
         val end = js.map(j => ctx.ledger.jobEndMs.getOrDefault(j.jobId, j.submitMs)).max
         (end - js.map(_.submitMs).min) / 1000.0
       }
-      val wait = trRuns.map(s => s.latencyS - s.body.get.get("duration_seconds").asDouble())
-      base ++ Map("traced_pass_s" -> tracedPassS.toSeq, "layers" -> (Map(
+      val wait = trRuns.map(s => s.latencyS - duration(s))
+      base ++ Map("traced_pass_s" -> tracedPassS.toSeq,
+        "layer_samples" -> Map(
+          "serve.handle_s" -> trRuns.map(duration),
+          "serve.queue_wait_p50_s" -> wait,
+          "serve.queue_wait_p90_s" -> wait,
+          "serve.http_floor_s" -> floorS.toSeq),
+        "layers" -> (Map(
         "exec.calls" -> groups.size / per,
         "exec.busy_s" -> groupBusy.sum / per,
         "exec.jobs" -> sqlJobs.size / per,
         "exec.tasks" -> r.tasksOf(sqlJobs).size / per,
         "exec.task_cpu_s" -> r.tasksOf(sqlJobs).map(_.cpuNs).sum / 1e9 / per,
-        "serve.handle_s" -> Stats.median(trRuns.map(_.body.get.get("duration_seconds").asDouble())),
-        "serve.queue_wait_p50_s" -> Stats.median(wait),
-        "serve.queue_wait_p90_s" -> Percentile(wait, 0.9),
-        "serve.http_floor_s" -> Stats.median(floorS.toSeq),
         "serve.batch_unique_share" ->
           (t2s.llm.generateCalls.get - trRuns.size).toDouble / math.max(trBatchItems, 1))
         ++ t2s.actorMetrics(r, per)
         ++ t2s.llmMetrics(trRuns.size + trBatchItems, per)))
     }
   }
-}
-
-object Percentile {
-  /** Linear-interpolation quantile, as numpy's default. */
-  def apply(xs: Seq[Double], q: Double): Double =
-    if (xs.isEmpty) 0.0 else {
-      val s = xs.sorted
-      val pos = q * (s.size - 1)
-      val lo = math.floor(pos).toInt
-      val hi = math.min(lo + 1, s.size - 1)
-      s(lo) + (s(hi) - s(lo)) * (pos - lo)
-    }
 }
 
 /** Shared operator-layer roll-up for the two corpus workloads. */
@@ -502,8 +516,8 @@ final class CorpusCurate(ctx: Ctx) extends Workload {
       val r = new Rollup(ctx.tracer.spans, ctx.ledger)
       base ++ Map("traced_pass_s" -> tracedS.toSeq,
         "jobs_by_source" -> OperatorMetrics.jobsBySource(r, per),
-        "layers" -> (OperatorMetrics(r, per) ++ Map(
-          "core.drain_s" -> Stats.median(drainS.toSeq))))
+        "layer_samples" -> Map("core.drain_s" -> drainS.toSeq),
+        "layers" -> OperatorMetrics(r, per))
     }
   }
 }
@@ -563,12 +577,14 @@ final class CorpusIngest(ctx: Ctx) extends Workload {
     sizes
     indexWriteS = Stats.time(bootstrap(snap))._2
     restore()
+    // two warm-up deltas: with one, the first timed delta is still
+    // JIT-compiling and reads a fifth slower than the second
     warmupS = Stats.time { delta(0, false, s"$work/warmup"); delta(1, false, s"$work/warmup") }._2
     next = 0
     restore()
     deltaS.clear()
     compactS.clear()
-    indexFiles.clear(); indexBytes.clear(); appendPerDoc.clear()
+    indexFiles.clear(); indexBytes.clear(); appendPerDoc.clear(); drainS.clear()
     CacheBin.drain()
   }
 
@@ -622,13 +638,14 @@ final class CorpusIngest(ctx: Ctx) extends Workload {
       val r = new Rollup(ctx.tracer.spans, ctx.ledger)
       base ++ Map("traced_pass_s" -> tracedS.toSeq,
         "jobs_by_source" -> OperatorMetrics.jobsBySource(r, per),
+        "layer_samples" -> Map(
+          "core.drain_s" -> drainS.toSeq,
+          "catalog.compact_s" -> compactS.toSeq,
+          "catalog.append_bytes_per_doc" -> appendPerDoc.toSeq),
         "layers" -> (OperatorMetrics(r, per) ++ Map(
-          "core.drain_s" -> Stats.median(drainS.toSeq),
           "catalog.index_write_s" -> indexWriteS,
-          "catalog.compact_s" -> Stats.median(compactS.toSeq),
           "catalog.index_files" -> indexFiles.lastOption.getOrElse(0L),
-          "catalog.index_bytes" -> indexBytes.lastOption.getOrElse(0L),
-          "catalog.append_bytes_per_doc" -> Stats.median(appendPerDoc.toSeq))))
+          "catalog.index_bytes" -> indexBytes.lastOption.getOrElse(0L))))
     }
   }
 }

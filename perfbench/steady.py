@@ -3,7 +3,7 @@ end-to-end metric, the median and the spread (interquartile range over
 median, as `statistics.quantiles(values, n=4)` gives the quartiles).
 
     python3 perfbench/steady.py --workload <name> --seeds 1-10 [--sets 2]
-        [--seconds 10]
+        [--seconds 15]
 
 With --sets 2 it repeats the whole seed list and also reports how far the
 second set's median moved from the first's. A spread or a move above the
